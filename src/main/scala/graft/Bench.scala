@@ -1,93 +1,78 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{call_function, col, struct, xxhash64}
 object Bench {
   /** Pruning-proof consuming action: reduce EVERY output column through
     * one xxhash64 + bit_xor aggregate. A bare `count()` lets Catalyst prune
     * pure-projection columns out of the plan entirely (a scan+project
     * query times as just the scan — q_parse_alb's UA classification and
     * derivation columns all vanished from count-based timings; SCALING.md
-    * round-7 documented the gap and ProfUaVer existed to measure around
-    * it). Hashing the full struct forces every declared column to
-    * evaluate while keeping the action a single scalar collect — no
-    * writer in the loop, and the per-row hash cost is uniform across
-    * queries. Top-level ORDER BYs are eliminated under any aggregating
-    * action (count() included), so sort-bearing queries keep the same
-    * treatment they always had. */
-  def consume(df: DataFrame): Unit = {
-    import org.apache.spark.sql.functions.{call_function, col, struct, xxhash64}
-    // bit_xor, not sum: a sum of 64-bit hashes overflows Long (an error
-    // under ANSI mode); xor is order-independent and overflow-free
-    df.agg(call_function("bit_xor", xxhash64(struct(df.columns.map(col): _*))))
-      .head()
+    * round-7 documented the gap). Hashing the full struct forces every
+    * declared column to evaluate while keeping the action a single scalar
+    * collect — no writer in the loop, and the per-row hash cost is
+    * uniform across queries. Top-level ORDER BYs are eliminated under
+    * any aggregating action (count() included), so sort-bearing queries
+    * keep the same treatment they always had. */
+  def consume(df: DataFrame): Unit = df.agg(hash(df)).head()
+
+  /** The `consume` reduction as a column: `bit_xor` of the `xxhash64` of
+    * every output column. bit_xor, not sum: a sum of 64-bit hashes
+    * overflows Long (an error under ANSI mode); xor is order-independent
+    * and overflow-free. */
+  def hash(df: DataFrame): Column =
+    call_function("bit_xor", xxhash64(struct(df.columns.map(col): _*)))
+
+  /** Release every cache / localCheckpoint block the previous query left
+    * behind. Lazy localCheckpoints (the dedup family's digest/signature
+    * frames) are otherwise freed only when the context cleaner notices
+    * the RDD is unreachable — i.e. on a future GC — so over a 130-query
+    * run resident blocks accumulate, storage steals from execution in
+    * the unified memory manager, and a query's measured time depends on
+    * which queries happened to run before it (the q_dedup_minhash r3
+    * "regression" was exactly this: family members added in hash-map
+    * order ahead of it, not an algorithm change). Disk-mode RoundState
+    * persists outlive their query the same way. */
+  def releaseState(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
   }
+
+  /** Delete a directory tree. walkFileTree (not Files.list) — the
+    * list() Stream must be closed or it leaks a file descriptor per
+    * directory, and deleting while the stream is open mutates the
+    * directory under iteration. */
+  def deleteTree(root: java.nio.file.Path): Unit = {
+    import java.nio.file.{FileVisitResult, Files, Path, SimpleFileVisitor}
+    import java.nio.file.attribute.BasicFileAttributes
+    if (!Files.exists(root)) return
+    Files.walkFileTree(root, new SimpleFileVisitor[Path] {
+      override def visitFile(f: Path, a: BasicFileAttributes): FileVisitResult = {
+        Files.deleteIfExists(f); FileVisitResult.CONTINUE
+      }
+      override def postVisitDirectory(d: Path, e: java.io.IOException): FileVisitResult = {
+        if (e != null) throw e
+        Files.deleteIfExists(d); FileVisitResult.CONTINUE
+      }
+    })
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val stageDir = java.nio.file.Files.createTempDirectory("graft-stage")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Intra-JVM pass aging fix (r16 verdict item 1): the generated-
-      // class cache defaults to 100 entries, but one full-registry pass
-      // generates ~2000 distinct codegen classes — every pass therefore
-      // re-generated and re-compiled (Janino) nearly every class, each
-      // compile loading fresh classes through a fresh classloader. The
-      // churn is what ages the JVM: metaspace/code-cache pressure and
-      // re-JIT of just-evicted methods grew pass sums 453.8 → 513.3 →
-      // 592.6 s within one 3-pass r16 sweep (uniform 1.27× per query —
-      // an engine-wide slowdown, not a query regression). The registry's
-      // working set measured ~4.5k codegen units per pass (a 4096-entry
-      // first cut still reloaded ~9k classes per pass — LRU in
-      // list-major order evicts exactly what the next pass needs);
-      // 16384 holds the whole run. Static conf — set before the
-      // session; Bench forks a fresh JVM so it always takes effect.
-      .config("spark.sql.codegen.cache.maxEntries", "16384")
-      // Status-store retention: the defaults (100k tasks, 1000 SQL
-      // executions) let driver bookkeeping grow for most of a full
-      // 3-pass sweep (389 queries × ~dozens of tasks each × passes),
-      // then churn at the cap — measured as a fixed ~86 ms/query
-      // pass-over-pass inflation on SMALL queries while big queries
-      // stayed flat (r17 diagnosis). Bench needs no status history;
-      // keep the stores small and steady from pass 1.
-      .config("spark.ui.retainedJobs", "300")
-      .config("spark.ui.retainedStages", "500")
-      .config("spark.ui.retainedTasks", "10000")
-      .config("spark.sql.ui.retainedExecutions", "100")
-      // map-typed outputs (q_map_fns*) must be hashable by consume()
-      .config("spark.sql.legacy.allowHashOnMapType", "true")
-      // Tables.events NTZ→TS cast is value-preserving only under UTC;
-      // the host happens to be UTC but don't depend on it
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // session disk stage cache (ops/StageCache): queries sharing an
-      // expensive substrate (the minhash family's digest/signature/
-      // verified frames) materialize it once per session as parquet and
-      // re-read it — the staging-table pattern a production pipeline
-      // uses; results are bit-identical. Fresh dir per run → no
-      // cross-run staleness; disk-backed → unaffected by releaseState.
-      // MEASUREMENT CAVEAT (recorded in the JSON as "stage_cache":
-      // true): with the cache on, only the first build of a shared
-      // substrate pays its cost, so family members' per-query times
-      // measure substrate REUSE — apples-to-apples only against
-      // baselines that stage equivalently.
-      .config("spark.graft.stageCache.dir", stageDir.toString)
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    // session disk stage cache (ops/StageCache): queries sharing an
+    // expensive substrate (the minhash family's digest/signature/
+    // verified frames) materialize it once per session as parquet and
+    // re-read it — the staging-table pattern a production pipeline
+    // uses; results are bit-identical. Fresh dir per run → no
+    // cross-run staleness; disk-backed → unaffected by releaseState.
+    // MEASUREMENT CAVEAT (recorded in the JSON as "stage_cache":
+    // true): with the cache on, only the first build of a shared
+    // substrate pays its cost, so family members' per-query times
+    // measure substrate REUSE — apples-to-apples only against
+    // baselines that stage equivalently.
+    val spark = GraftSession(stageDir = Some(stageDir.toString))
     spark.sparkContext.setLogLevel("WARN")
-    // Release every cache / localCheckpoint block the previous query left
-    // behind. Lazy localCheckpoints (the dedup family's digest/signature
-    // frames) are otherwise freed only when the context cleaner notices
-    // the RDD is unreachable — i.e. on a future GC — so over a 130-query
-    // run resident blocks accumulate, storage steals from execution in
-    // the unified memory manager, and a query's measured time depends on
-    // which queries happened to run before it (the q_dedup_minhash r3
-    // "regression" was exactly this: family members added in hash-map
-    // order ahead of it, not an algorithm change).
-    def releaseState(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
     // Spill observability (round-14): per-query shuffle/sort spill bytes
     // from executor task metrics, so the next spill cliff (the suffixlcp
     // third-decade finding was INFERRED from wall time) is measured, not
@@ -153,7 +138,7 @@ object Bench {
         System.err.println(s"[bench] warmup $name FAILED: ${e.getMessage}")
         warmupFailed += name }
     }
-    releaseState()
+    releaseState(spark)
     System.err.println(s"[bench] post-warmup telemetry: ${jvmTelemetry()}")
     // Identical code swung q_dedup_cluster 13.05s -> 8.51s between two driver
     // runs (GC, page cache, host contention), so a single sample cannot grade
@@ -197,7 +182,7 @@ object Bench {
                  catch { case e: Throwable =>
                    System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false }
         val elapsed = (System.nanoTime() - t0) / 1e9
-        releaseState()
+        releaseState(spark)
         spillByName(name) = math.max(spillByName(name),
           spillMem.get() + spillDisk.get() - sp0)
         // Forced GC every query cost ~0.3-0.5 s × |queries| × reps —
@@ -285,24 +270,7 @@ object Bench {
     spark.stop()
     // The per-run stage dir would otherwise accumulate parquet under
     // /tmp across runs; delete it now that the session is closed.
-    // walkFileTree (not Files.list) — the list() Stream must be closed
-    // or it leaks a file descriptor per directory, and deleting while
-    // the stream is open mutates the directory under iteration.
-    def rm(root: java.nio.file.Path): Unit = {
-      import java.nio.file.{FileVisitResult, Files, Path, SimpleFileVisitor}
-      import java.nio.file.attribute.BasicFileAttributes
-      if (!Files.exists(root)) return
-      Files.walkFileTree(root, new SimpleFileVisitor[Path] {
-        override def visitFile(f: Path, a: BasicFileAttributes): FileVisitResult = {
-          Files.deleteIfExists(f); FileVisitResult.CONTINUE
-        }
-        override def postVisitDirectory(d: Path, e: java.io.IOException): FileVisitResult = {
-          if (e != null) throw e
-          Files.deleteIfExists(d); FileVisitResult.CONTINUE
-        }
-      })
-    }
-    try rm(stageDir)
+    try deleteTree(stageDir)
     catch { case e: Throwable =>
       System.err.println(s"[bench] stage-dir cleanup failed: ${e.getMessage}") }
   }

@@ -36,9 +36,9 @@ import org.apache.spark.storage.StorageLevel
   * their own SUPERSEDED rounds via [[next]]; the frames that survive
   * the loop (edge substrates, the final round) are the query's result
   * lineage and stay persisted — the session owner releases them
-  * (Bench/Verify call `cacheManager.clearCache()` between queries;
-  * long-lived sessions such as profilers must do the same, as
-  * ProfGraphDisk15 and Round15Spec2 do).
+  * (Bench and the CorpusScale harness call `Bench.releaseState`
+  * between queries, as Round15Spec2 does between runs; any other
+  * long-lived session must do the same).
   */
 object RoundState {
 

@@ -28,7 +28,7 @@ object TextAnalysis {
   /** Adjacent-word bigrams "w1<sep>w2" of a token array, empty for
     * sub-bigram docs. Built as `zip_with` over two slices of the array —
     * measured ~7× cheaper per row than walking `sequence(1, n-1)` with
-    * two bounds-checked `element_at` calls per index (ProfShingle), and
+    * two bounds-checked `element_at` calls per index, and
     * the slice window is inherently safe where `sequence(1, 0)` descends
     * through index 0 and throws. */
   def bigrams(ws: Column, sep: String): Column =

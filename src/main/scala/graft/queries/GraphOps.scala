@@ -123,7 +123,7 @@ object GraphOps {
         // join needs hashpartitioning(src), and a localCheckpoint
         // preserves its input partitioning — so the EDGE side (the big
         // one) ships zero bytes in every round; only the rank frame
-        // moves (r11 experiment, ProfGraphCkpt: 3.2 → 2.6 s at sf0.1)
+        // moves (r11 checkpoint experiment, SCALING.md: 3.2 → 2.6 s at sf0.1)
         // EAGER checkpoints since round 14: the lazy variant does NOT
         // truncate lineage under AQE (SCALING.md §round-13 finding 1 —
         // each round re-executes its predecessors, ~rounds²·edges work;
@@ -153,7 +153,7 @@ object GraphOps {
           // 100 TB where V grows with the corpus). The hint swaps each
           // for a |V|-row exchange + parallel per-partition hash builds;
           // the edge side stays zero-shuffle on its repartition(src)
-          // layout either way. Measured −17% (BenchOne med 2.81 → 2.33,
+          // layout either way. Measured −17% (single-query bench med 2.81 → 2.33,
           // controls flat); plan diff in plans/r18.
           val contribs = edges
             .join(rank.withColumnRenamed("node", "src")
@@ -287,7 +287,7 @@ object GraphOps {
           // the edge side never shuffles; the hint would FORCE two full
           // edge exchanges (by a, then by b — the frame is not
           // partitioned on either) and measured a clear regression
-          // (BenchOne med 2.71 baseline vs 3.41 hinted, controls +5%).
+          // (single-query bench med 2.71 baseline vs 3.41 hinted, controls +5%).
           // The broadcast here is of a shrinking filtered set, not
           // per-round full-V state — it stays.
           edges = edges

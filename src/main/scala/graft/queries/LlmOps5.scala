@@ -290,7 +290,7 @@ FROM canon GROUP BY 1 ORDER BY 1"""),
     // different PLAN: the tf⋈df join keys on `word`, and real vocabularies
     // are Zipf — "the" alone carries ~5% of all occurrences, so a plain
     // shuffle-by-word sends billions of rows to one reducer at web scale
-    // (the same fixed-key-space skew the round-8 ProfScale re-measure
+    // (the same fixed-key-space skew the round-8 scale re-measure
     // exposed in the old signature build). The canonical split: the HEAD
     // of the df table (top-H words by df — H=8 here, ~1e5 in production;
     // Zipf means the head covers most occurrences) broadcasts, so every

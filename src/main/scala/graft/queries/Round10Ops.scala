@@ -149,7 +149,7 @@ object Round10Ops {
           // posture). The hint swaps it for one |V|-row exchange + 32
           // parallel per-partition hash builds; the O(E) edge side stays
           // zero-shuffle on its repartition(src) checkpoint layout
-          // either way. Measured −23% (BenchOne med 4.68 → 3.60/3.65 in
+          // either way. Measured −23% (single-query bench med 4.68 → 3.60/3.65 in
           // two windows, controls flat); plan diff in plans/r18.
           // Exact-integer aggregates downstream are order-insensitive.
           val nextLabels = edges

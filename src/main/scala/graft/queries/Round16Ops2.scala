@@ -20,7 +20,7 @@ import graft.Tables
   *     for the re-point at a CONVERGING instance. The alternating
   *     schedule breaks the 2-cycle by construction, and on the
   *     thresholded ≥2-co-occurrence graph (the q_graph_components
-  *     corpus) deltas shrink to EMPTY: measured (ProfDelta17)
+  *     corpus) deltas shrink to EMPTY: measured per-round delta sizes
   *     10→199→0 at sf0.001 (3 rounds), 100→1933→…→0 at sf0.01 (9),
   *     1000→6488→14→33→0 at sf0.1 (5). The loop caps at
   *     [[LpMaxRounds]] rounds (mirrored by the unrolled oracle) and

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Plan-inspection utility: prints the formatted physical plan of the
   * named queries (or all) at the given scale dir. Used to audit pushdown,
@@ -20,17 +18,7 @@ object Explain {
     // substrates print as parquet scans of the stage dir exactly as the
     // bench executes them; unset, stage() degrades to the gate's lazy
     // checkpoint and the printed plan is the gate's).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.allowHashOnMapType", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-    sys.env.get("SPARK_GRAFT_STAGE_DIR")
-      .foreach(p => builder.config("spark.graft.stageCache.dir", p))
-    val spark = builder.getOrCreate()
+    val spark = GraftSession(stageDir = sys.env.get("SPARK_GRAFT_STAGE_DIR"))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Round-body plan evidence for the r18 SHUFFLE_HASH change (the
   * registered loop queries return only the final checkpoint-leaf scan,
@@ -12,26 +12,22 @@ import graft.Tables
   * as the queries build them (same substrates, same RoundState
   * checkpoints) and prints the round-1 plan with and without the
   * SHUFFLE_HASH hint — the before/after pair committed under plans/r18.
-  * Driver-side tooling only (the ProfGraphCkpt pattern).
+  * Driver-side tooling only; nothing in the registry calls it.
   *
   * Usage: runMain graft.tools.PlanRound <sfDir>
+  * (`SPARK_GRAFT_CPUS=32` reproduces plans/r18; the default is 4 cores).
   */
 object PlanRound {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions).getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
 
     def hintIf(df: DataFrame, on: Boolean): DataFrame =
       if (on) df.hint("SHUFFLE_HASH") else df
 
     // substrate replicas (bipartitePairs / coOrderPairs are
-    // private[queries]; same expressions, ProfGraphCkpt-style)
+    // private[queries]; same expressions)
     def bipartitePairs(): DataFrame =
       graft.ops.StageCache.stage(
         Tables.lineitem(spark, d).select(

@@ -1,16 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Round-13 scale proof: ONE MORE DECADE for the ten heaviest families
-  * (`sbt "Test/runMain graft.ProfCorpusScale13 [factors] [reps] [queries]"`,
-  * e.g. `1,10,100 2`). Every 100-TB claim in SCALING.md rested on
-  * 1×/10× exponents; this harness extends the same corpus construction
-  * (factor× disjoint key-shifted fact copies, dimensions fixed — the
-  * [[ProfCorpusScale11]] regime) to 100× (sf10-equivalent: 60M
-  * lineitems, 500k documents, 200k embeddings, 10M events) for the
-  * queries where a Σbucket²/wedge-cap/prefix-filter cliff would hide:
+/** The scale harness: times registry queries over factor× corpora built
+  * from sf0.1 (`sbt "Test/runMain graft.CorpusScale [factors] [reps]
+  * [queries]"`, e.g. `1,10,100 2`). Each factor's corpus is factor×
+  * disjoint key-shifted copies of the fact tables with the dimensions
+  * fixed — the regime of SCALING.md's corpus-scale tables since round
+  * 9. At 100× that is sf10-equivalent (60M lineitems, 500k documents,
+  * 200k embeddings, 10M events). The default query list is the round-13 set,
+  * where a Σbucket²/wedge-cap/prefix-filter cliff would hide:
   *
   *   graph:      q_graph_linkpred, q_graph_labelprop, q_graph_localcc,
   *               q_graph_pagerank, q_graph_bfs
@@ -24,10 +24,15 @@ import org.apache.spark.sql.functions._
   * scans). Stage cache stays OFF: each rep pays the full pipeline, so
   * fitted exponents measure the ALGORITHM, not substrate amortization.
   * Reported figure is the lower median of `reps` (even counts must not
-  * report the worse half). Results + fitted exponents live in
-  * SCALING.md §round-13.
+  * report the worse half). `tools/fit_exponents.py` fits exponents from
+  * the `[c13-scale]` lines; results live in SCALING.md §round-13 on.
+  *
+  * `SPARK_GRAFT_CPUS` sets the core count (the SCALING.md figures used
+  * 32). `SPARK_GRAFT_ROUND_STATE` / `SPARK_GRAFT_EDGE_STATE` set
+  * `spark.graft.graph.roundState` / `edgeState` (ops/RoundState), e.g.
+  * `disk` for the graph rounds past the memory wall (§round-15, §round-17).
   */
-object ProfCorpusScale13 {
+object CorpusScale {
 
   val heavyQueries: Seq[String] = Seq(
     "q_graph_linkpred", "q_graph_labelprop", "q_graph_localcc",
@@ -45,34 +50,13 @@ object ProfCorpusScale13 {
       if (args.length > 2) args(2).split(",").map(_.trim).toSeq
       else heavyQueries
     val baseSf = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      // Measured and REJECTED as the third-decade fix: raising the AQE
-      // initial partition count (SPARK_GRAFT_INIT_PARTS=256) made the
-      // superlinear queries WORSE at 100× (q_graph_labelprop 540→796 s,
-      // q_graph_bfs 365→714 s) — the cliff is not shuffle width; see
-      // SCALING.md §round-13 for the actual cause (checkpoint lineage).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
-    // round-17 isolation knobs: route the iterative loops' state (all
-    // rounds / the edge substrate only) to DISK_ONLY via env — runtime
-    // confs, read by RoundState at query build time
+    // runtime confs, read by RoundState at query build time
     sys.env.get("SPARK_GRAFT_ROUND_STATE")
       .foreach(v => spark.conf.set("spark.graft.graph.roundState", v))
     sys.env.get("SPARK_GRAFT_EDGE_STATE")
       .foreach(v => spark.conf.set("spark.graft.graph.edgeState", v))
-
-    def releaseState(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
 
     /** factor copies of `df`, every column in `keys` shifted by
       * i·keySpace per copy — one scan via crossJoin(range). */
@@ -117,28 +101,14 @@ object ProfCorpusScale13 {
         val times = (1 to reps).map { _ =>
           val t1 = System.nanoTime()
           Bench.consume(fn(spark, dir))
-          releaseState(); System.gc()
+          Bench.releaseState(spark); System.gc()
           (System.nanoTime() - t1) / 1e9
         }.sorted
         val med = times((times.size - 1) / 2)
         println(f"[c13-scale] ${f}x $q: $med%.2f s (${times.map(t => f"$t%.2f").mkString(",")})")
       }
       // free the ~GBs before the next factor's generation
-      def rm(root: java.nio.file.Path): Unit = {
-        import java.nio.file.{FileVisitResult, Files, Path, SimpleFileVisitor}
-        import java.nio.file.attribute.BasicFileAttributes
-        if (!Files.exists(root)) return
-        Files.walkFileTree(root, new SimpleFileVisitor[Path] {
-          override def visitFile(p: Path, a: BasicFileAttributes): FileVisitResult = {
-            Files.deleteIfExists(p); FileVisitResult.CONTINUE
-          }
-          override def postVisitDirectory(p: Path, e: java.io.IOException): FileVisitResult = {
-            if (e != null) throw e
-            Files.deleteIfExists(p); FileVisitResult.CONTINUE
-          }
-        })
-      }
-      rm(java.nio.file.Paths.get(dir))
+      Bench.deleteTree(java.nio.file.Paths.get(dir))
     }
     spark.stop()
   }

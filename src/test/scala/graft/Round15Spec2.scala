@@ -170,21 +170,24 @@ class Round15Spec2 extends SparkSpec {
   // ---- 3. disk-backed round state (ops/RoundState) --------------------
 
   test("graph round state: disk mode (DISK_ONLY persist) == memory mode bit-for-bit") {
-    val key = "spark.graft.graph.roundState"
-    def run(mode: String, q: String): Seq[org.apache.spark.sql.Row] = {
+    def run(key: String, mode: String, q: String): Seq[org.apache.spark.sql.Row] = {
       spark.conf.set(key, mode)
       try SparkEntry.queries(q)(spark, sf).collect().toSeq
       finally {
         spark.conf.unset(key)
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        Bench.releaseState(spark)
       }
     }
-    for (q <- Seq("q_graph_labelprop", "q_graph_pagerank")) {
-      val mem = run("memory", q)
-      val dsk = run("disk", q)
-      assert(mem.nonEmpty && mem == dsk, s"$q: disk-mode rounds diverged")
+    // roundState moves every round's state; edgeState only the edge
+    // substrate of the two RoundState.edge callers
+    for ((key, q) <- Seq(
+        "spark.graft.graph.roundState" -> "q_graph_labelprop",
+        "spark.graft.graph.roundState" -> "q_graph_pagerank",
+        "spark.graft.graph.edgeState" -> "q_graph_components",
+        "spark.graft.graph.edgeState" -> "q_graph_labelprop_delta")) {
+      val mem = run(key, "memory", q)
+      val dsk = run(key, "disk", q)
+      assert(mem.nonEmpty && mem == dsk, s"$q: $key=disk diverged")
     }
   }
 

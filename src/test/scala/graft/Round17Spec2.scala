@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *      q_graph_labelprop's labels bit-for-bit on the same corpus
   *      (recomputing only changed-adjacent nodes misses no update);
   *      the REGISTERED query now runs the converging semi-synchronous
-  *      schedule instead (Round16Ops2 scaladoc, ProfDelta17 numbers);
+  *      schedule instead (Round16Ops2 scaladoc has the numbers);
   *   2. the semi-sync variant actually converges at the spec corpus
   *      (empty delta before the cap) and its labels are a fixpoint of
   *      its own schedule: one more full side-round changes nothing.

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Fit per-query scaling exponents from ProfCorpusScale13 output lines.
+"""Fit per-query scaling exponents from graft.CorpusScale output lines.
 
 Input: one or more log files containing lines like
     [c13-scale] 10x q_graph_linkpred: 12.34 s (11.90,12.34)
